@@ -225,7 +225,7 @@ class BQIndex:
     def search(
         self,
         codes: DataFrame,
-        queries: DataFrame,
+        queries: DataFrame | None,
         k: int = 10,
         *,
         words_col: str = "words",
@@ -266,7 +266,11 @@ class BQIndex:
         corpus once for the envelope count, the fit AND the queries) skip
         the per-search collect job.  Scoring is per-qid, so block order is
         immaterial; values must equal what collecting ``queries`` would
-        yield (the caller's contract)."""
+        yield (the caller's contract).  ``queries`` may be None only when
+        ``qblock`` is given and there is no ``refine_train``."""
+        if queries is None and (qblock is None or refine_train is not None):
+            raise ValueError("BQIndex.search needs queries: a qblock alone "
+                             "serves only the unrefined kernel path")
         if pre_filter is not None:
             codes = codes.filter(
                 F.expr(pre_filter) if isinstance(pre_filter, str) else pre_filter)

@@ -44,6 +44,8 @@ _OUT_SCHEMA = "qid bigint, id bigint, dist double, rank int"
 # ≤10k rows, README.md:188-241): the GEMM path broadcasts queries by value.
 MAX_BROADCAST_QUERIES = 100_000
 
+_GEMM_METRICS = ("euclidean", "angular", "hamming")
+
 
 def topk_window(scored: DataFrame, k: int, qid: str = "qid", dist: str = "dist", id_col: str = "id") -> DataFrame:
     """Per-query top-k: the A1 window (SURVEY §2.6), deterministic on ties."""
@@ -74,13 +76,22 @@ def knn(
     scan, which is the filter-ann fast path (SURVEY §2.2 Q4).
     """
     qvec = query_vec_col or vec_col
-    if metric != "jaccard":  # jaccard items are sets: variable length is legal
-        _check_dims(train, queries, vec_col, qvec)
-    if pre_filter is not None:
-        train = train.filter(F.expr(pre_filter) if isinstance(pre_filter, str) else pre_filter)
     if method == "auto":
         method = "gemm" if metric in ("euclidean", "angular") else (
             "sparse" if metric == "jaccard" else "expr")
+    if method == "gemm" and metric not in _GEMM_METRICS:
+        method = "expr"  # jaccard is set-typed; GEMM does not apply
+    # the GEMM path collects the queries anyway: their width comes free
+    qblock = _collect_queries(queries, qid_col, qvec) if method == "gemm" else None
+    if metric != "jaccard":  # jaccard items are sets: variable length is legal
+        if qblock is None:
+            q = queries.select(F.size(qvec).alias("d")).first()
+            q_dim = None if q is None else q["d"]
+        else:
+            q_dim = qblock[1].shape[1] if len(qblock[0]) else None
+        _check_dims(train, vec_col, q_dim)
+    if pre_filter is not None:
+        train = train.filter(F.expr(pre_filter) if isinstance(pre_filter, str) else pre_filter)
     if method == "sparse":
         if metric != "jaccard":
             raise ValueError("method='sparse' applies to metric='jaccard' only")
@@ -88,20 +99,22 @@ def knn(
     if method == "expr":
         return _knn_expr(train, queries, k, metric, vec_col, qvec, id_col, qid_col)
     if method == "gemm":
-        return _knn_gemm(train, queries, k, metric, vec_col, qvec, id_col, qid_col)
+        return _knn_gemm(train, *qblock, k, metric, vec_col, id_col)
     raise ValueError(f"unknown method {method!r}")
 
 
-def _check_dims(train, queries, vec_col, qvec) -> None:
+def _check_dims(train, vec_col, q_dim: Optional[int]) -> None:
     """Fail fast on mismatched vector lengths: ``zip_with`` zips to the
     SHORTER array, so a 64-d train scored against 32-d queries would
-    silently return wrong distances instead of erroring."""
+    silently return wrong distances instead of erroring.  ``q_dim`` is the
+    query width (None: no query rows), so only the train side is probed."""
+    if q_dim is None:
+        return
     t = train.select(F.size(vec_col).alias("d")).first()
-    q = queries.select(F.size(qvec).alias("d")).first()
-    if t is not None and q is not None and t["d"] != q["d"]:
+    if t is not None and t["d"] != q_dim:
         raise ValueError(
             f"vector dimension mismatch: train {vec_col} has d={t['d']}, "
-            f"queries have d={q['d']}"
+            f"queries have d={q_dim}"
         )
 
 
@@ -182,12 +195,7 @@ def _collect_queries(queries: DataFrame, qid_col: str, qvec: str) -> tuple[np.nd
     return qids, qmat
 
 
-def _knn_gemm(train, queries, k, metric, vec_col, qvec, id_col, qid_col) -> DataFrame:
-    if metric not in ("euclidean", "angular", "hamming"):
-        # jaccard is set-typed; GEMM does not apply (expr path handles it).
-        return _knn_expr(train, queries, k, metric, vec_col, qvec, id_col, qid_col)
-
-    qids, qmat = _collect_queries(queries, qid_col, qvec)
+def _knn_gemm(train, qids, qmat, k, metric, vec_col, id_col) -> DataFrame:
     spark = train.sparkSession
     if len(qids) == 0:
         return spark.createDataFrame([], _OUT_SCHEMA)

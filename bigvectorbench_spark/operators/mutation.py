@@ -9,17 +9,24 @@ table** (exactly what Delta/Iceberg do under MERGE/DELETE, re-implemented
 minimally here because the container has plain parquet only):
 
 - the table is a base parquet snapshot plus an ordered op log
-  (insert/upsert/delete entries with a monotonically increasing sequence);
-- the read view resolves each id to its latest op (window max-seq) and drops
-  tombstones — identical semantics to MERGE INTO;
+  (insert/upsert/delete entries, in the order they were issued);
+- the read view resolves each id to its latest op and drops tombstones —
+  identical semantics to MERGE INTO;
 - ``checkpoint()`` compacts log into base (the analog of OPTIMIZE /
   rewrite), keeping the view cheap.
 
-At 100 TB: base is partitioned parquet, the op log is tiny relative to base,
-and the resolve-latest view is a broadcast anti/semi join against the log —
-NOT a full-table window.  ``snapshot()`` below implements that: the window
-runs only over (log ∪ base-rows-whose-id-appears-in-log), the untouched bulk
-of the base table is passed through unshuffled.
+The log is resolved on the driver.  The invariant that makes this exact:
+every op writes a WHOLE row (a column the op does not name is NULL, and a
+delete carries only the id), and any log entry beats the base row.  So
+the latest op per id, one Python pass over the list, is that id's final
+state, whatever the base held.  The read view is then
+``base`` left-anti-joined with the (broadcast) touched ids, unioned with the
+latest non-delete rows.  Both small relations are built through Arrow
+(``tables.arrow_frame``), so they plan as JVM-side local scans.  No
+distinct, window or semi-join over base runs, and the untouched bulk of
+base streams through unshuffled.  At 100 TB base is partitioned parquet and
+the log is tiny relative to it: the broadcast anti-join is the whole cost
+of the merge.
 """
 
 from __future__ import annotations
@@ -27,8 +34,11 @@ from __future__ import annotations
 import time
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from bigvectorbench_spark.sources.tables import arrow_frame
 
 OP_INSERT = "i"
 OP_UPSERT = "u"
@@ -43,12 +53,16 @@ class VectorTable:
         self.id_col = id_col
         self._base = base
         self._schema = base.schema
-        self._log: list[tuple[int, str, Optional[Row]]] = []  # (seq, op, row)
-        self._seq = 0
-        self._num_entities = base.count()
-        self._max_id = (base.agg(F.max(id_col)).first() or [None])[0]
-        if self._max_id is None:
-            self._max_id = -1
+        self._log: list[tuple[str, dict]] = []  # (op, whole row), in issue order
+        # count and max(id) observed on one scan: one job, where an aggregate
+        # runs two under AQE (its exchange's map stage, then the result)
+        stats = Observation()
+        (base.select(id_col)
+         .observe(stats, F.count(F.lit(1)).alias("n"), F.max(id_col).alias("max_id"))
+         .write.format("noop").mode("overwrite").save())
+        got = stats.get
+        self._num_entities = got["n"]
+        self._max_id = -1 if got["max_id"] is None else got["max_id"]
 
     # ------------------------------------------------------------- M1 bulk load
     @classmethod
@@ -62,10 +76,9 @@ class VectorTable:
         return cls(spark, spark.read.parquet(path), id_col=id_col), elapsed
 
     # ---------------------------------------------------------------- op log
-    def _append(self, op: str, row: Optional[dict]) -> float:
+    def _append(self, op: str, row: dict) -> float:
         t0 = time.perf_counter()
-        self._seq += 1
-        self._log.append((self._seq, op, Row(**row) if row else None))
+        self._log.append((op, dict(row)))
         return time.perf_counter() - t0
 
     def insert(self, values: dict) -> float:
@@ -91,51 +104,28 @@ class VectorTable:
         return self._num_entities
 
     # ------------------------------------------------------------------ view
-    def _log_df(self) -> Optional[DataFrame]:
-        if not self._log:
-            return None
-        cols = [f.name for f in self._schema.fields]
-        rows = []
-        for seq, op, row in self._log:
-            d = row.asDict() if row is not None else {}
-            rows.append(tuple(d.get(c) for c in cols) + (seq, op))
-        from pyspark.sql.types import StructType, StructField, LongType, StringType
-        schema = StructType(
-            list(self._schema.fields)
-            + [StructField("__seq", LongType()), StructField("__op", StringType())]
-        )
-        return self.spark.createDataFrame(rows, schema)
-
     def snapshot(self) -> DataFrame:
-        """Current view = base with the op log merged in.
+        """Current view = base with the op log merged in; runs no Spark job.
 
-        Only ids touched by the log enter the latest-version resolution; the
-        untouched base majority streams through without a shuffle (the log is
-        broadcast for both the anti-join and the window input)."""
-        log = self._log_df()
-        if log is None:
+        Every op writes a whole row, so the latest op per id (one pass over
+        the log, on the driver) replaces whatever base held for that id:
+        base rows whose id the log touched are dropped by a broadcast
+        left-anti join, and the latest non-delete rows are unioned in.  A
+        base row with a NULL id never matches the join and passes through."""
+        if not self._log:
             return self._base
-        touched = log.select(self.id_col).distinct()
+        latest = {row[self.id_col]: (op, row) for op, row in self._log}
+        id_schema = StructType([self._schema[self.id_col]])
+        touched = arrow_frame(self.spark, [{self.id_col: i} for i in latest], id_schema)
         untouched = self._base.join(F.broadcast(touched), self.id_col, "left_anti")
-        base_touched = (
-            self._base.join(F.broadcast(touched), self.id_col, "left_semi")
-            .withColumn("__seq", F.lit(0).cast("long"))
-            .withColumn("__op", F.lit(OP_INSERT))
-        )
-        from pyspark.sql import Window
-        w = Window.partitionBy(self.id_col).orderBy(F.col("__seq").desc())
-        resolved = (
-            base_touched.unionByName(log)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter((F.col("__rn") == 1) & (F.col("__op") != OP_DELETE))
-            .drop("__seq", "__op", "__rn")
-        )
-        return untouched.unionByName(resolved)
+        live = [row for op, row in latest.values() if op != OP_DELETE]
+        return untouched.unionByName(arrow_frame(self.spark, live, self._schema))
 
     def checkpoint(self, path: str) -> None:
-        """Compact log into a new base snapshot (OPTIMIZE analog)."""
+        """Compact log into a new base snapshot (OPTIMIZE analog).  The
+        schema is known, so reading the compacted files back infers none."""
         self.snapshot().write.mode("overwrite").parquet(path)
-        self._base = self.spark.read.parquet(path)
+        self._base = self.spark.read.schema(self._schema).parquet(path)
         self._log.clear()
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigvectorbench_spark.operators.knn import knn
+from bigvectorbench_spark.sources.tables import arrow_frame
 
 
 def time_individual_queries(
@@ -50,10 +51,10 @@ def time_individual_queries(
             return knn(t, q, k=kk, metric=metric, method="expr")
 
     q_rows = queries.collect()
-    cols = queries.columns
     out = []
     for row in q_rows:
-        one = spark.createDataFrame([row], queries.schema)
+        # a local scan: the timed action unpickles nothing in a Python worker
+        one = arrow_frame(spark, [row.asDict(recursive=True)], queries.schema)
         best = float("inf")
         for _ in range(max(1, runs)):
             plan = search_fn(train, one, k)          # prepare (not timed)

@@ -35,6 +35,17 @@ def _rest(base: str, path: str):
         return json.loads(r.read().decode())
 
 
+def _job_ms(job: dict) -> int:
+    """Wall time of one job: completion minus submission (REST timestamps
+    such as ``2026-01-01T12:00:00.123GMT``)."""
+    from datetime import datetime
+
+    def ts(key):
+        return datetime.strptime(job[key], "%Y-%m-%dT%H:%M:%S.%fGMT")
+
+    return round((ts("completionTime") - ts("submissionTime")).total_seconds() * 1000)
+
+
 def main() -> None:
     names = sys.argv[1:]
     if not names:
@@ -80,7 +91,7 @@ def main() -> None:
             "n_stages": n_stages, "n_tasks": n_tasks,
             "executor_run_ms": run_ms,
             "jobs": [{"stages": len(j.get("stageIds", [])),
-                      "dur_ms": j.get("numCompletedTasks", 0)} for j in jobs],
+                      "dur_ms": _job_ms(j)} for j in jobs],
         }, separators=(",", ":")), flush=True)
 
 

@@ -88,3 +88,17 @@ def test_fit_headline_line_small_set_untouched():
     parsed = json.loads(bench.fit_headline_line(out, timings))
     assert parsed["queries"] == {"a": 1.234, "b": 0.567}
     assert "q_omitted" not in parsed
+
+
+def test_job_stats_reports_job_wall_time():
+    """scripts/job_stats.py's per-job ``dur_ms`` is completion minus
+    submission of the REST job record, not its task count."""
+    import os
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+    from job_stats import _job_ms
+
+    job = {"submissionTime": "2026-01-01T12:00:00.250GMT",
+           "completionTime": "2026-01-01T12:00:01.125GMT",
+           "numCompletedTasks": 8}
+    assert _job_ms(job) == 875

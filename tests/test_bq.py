@@ -268,6 +268,11 @@ def test_search_qblock_matches_collect_path(spark):
     assert got_perm == want
     with pytest.raises(ValueError, match="kernel-path shortcut"):
         idx.search(codes, q, k=7, qblock=(qids, qmat), method="expr")
+    with pytest.raises(ValueError, match="needs queries"):
+        idx.search(codes, None, k=7)
+    with pytest.raises(ValueError, match="needs queries"):
+        idx.search(codes, None, k=7, qblock=(qids, qmat),
+                   refine_train=_vec_df(spark, X))
 
 
 def test_fused_ctx_thresholds_match_fit(spark):

@@ -176,3 +176,53 @@ def test_table_dim_matches_size_probe(spark, tmp_path):
     want = (spark.read.parquet(str(tmp_path / "embeddings.parquet"))
             .select(F.size("embedding").alias("d")).first()["d"])
     assert table_dim(str(tmp_path), "embeddings", "embedding") == want == 7
+
+
+def _write_dim_table(root, shards):
+    """A sharded embeddings.parquet directory, one part file per list of
+    rows (an empty list writes an empty shard)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = root / "embeddings.parquet"
+    d.mkdir(parents=True, exist_ok=True)
+    for s, rows in enumerate(shards):
+        pq.write_table(pa.table({"embedding": pa.array(rows, pa.list_(pa.float32()))}),
+                       str(d / f"part-{s}.parquet"))
+
+
+def test_table_dim_skips_empty_shards(tmp_path):
+    """An empty first shard (and its empty batches) is skipped, not a
+    StopIteration."""
+    from bigvectorbench_spark.sources.tables import table_dim
+
+    _write_dim_table(tmp_path, [[], [[1.0] * 5, [2.0] * 5]])
+    assert table_dim(str(tmp_path), "embeddings", "embedding") == 5
+
+
+def test_table_dim_skips_nulls_and_names_an_all_null_column(tmp_path):
+    """Leading null vectors are skipped, not a TypeError; a column with no
+    non-null value raises a ValueError that names it."""
+    from bigvectorbench_spark.sources.tables import table_dim
+
+    _write_dim_table(tmp_path / "a", [[None, None], [None, [3.0] * 6]])
+    assert table_dim(str(tmp_path / "a"), "embeddings", "embedding") == 6
+    _write_dim_table(tmp_path / "b", [[None], []])
+    with pytest.raises(ValueError, match="embeddings.embedding has no non-null value"):
+        table_dim(str(tmp_path / "b"), "embeddings", "embedding")
+
+
+def test_table_dim_rereads_a_rewritten_table(tmp_path):
+    """The cache is keyed on file mtime and size: a table rewritten in place
+    with a new width is read again."""
+    import os
+
+    from bigvectorbench_spark.sources.tables import table_dim
+
+    _write_dim_table(tmp_path, [[[1.0] * 4]])
+    assert table_dim(str(tmp_path), "embeddings", "embedding") == 4
+    part = tmp_path / "embeddings.parquet" / "part-0.parquet"
+    st = os.stat(part)
+    _write_dim_table(tmp_path, [[[1.0] * 9]])
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))  # coarse-clock filesystems
+    assert table_dim(str(tmp_path), "embeddings", "embedding") == 9

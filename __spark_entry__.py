@@ -25,11 +25,12 @@ from pyspark.sql import functions as F
 from bigvectorbench_spark.functions import distance as dx
 from bigvectorbench_spark.functions import text as tx
 from bigvectorbench_spark.operators import dedup as dd
+from bigvectorbench_spark.operators import hybrid as hy
 from bigvectorbench_spark.operators import metrics as mx
 from bigvectorbench_spark.operators import multivector as mv
 from bigvectorbench_spark.operators.filter_knn import (
     filtered_ivf_knn, filtered_knn, postfilter_knn)
-from bigvectorbench_spark.operators.knn import knn, knn_hamming_packed
+from bigvectorbench_spark.operators.knn import knn, knn_hamming_packed, topk_window
 from bigvectorbench_spark.operators import retrieval as rt
 from bigvectorbench_spark.operators.bq import BQIndex
 from bigvectorbench_spark.operators.pq import PQIndex
@@ -1999,38 +2000,12 @@ def q_hashed_embed_knn(spark, sf):
     hash-match.  Plan: query embeddings broadcast, corpus scanned once,
     WindowGroupLimit applies k before the rank shuffle (the knn_* plan
     family)."""
-    from bigvectorbench_spark.functions import embed as em
-
-    # each stage MATERIALIZED in its own select: the d-wide embedding
-    # fold references the hash array once per component, and the norm
-    # references the vector — non-materialized inputs re-run every md5
-    # dim times (measured 19.1s -> 3.2s at sf0.1 for this query)
-    base = (_docs_wide(spark, sf)
-            .select("doc_id", tx.tokens(F.col("text")).alias("tk"))
-            .select("doc_id", em.token_hashes(F.col("tk")).alias("th"))
-            .select("doc_id", em.hashed_embedding(F.col("th")).alias("v"))
-            .withColumn(
-                "nsq",
-                F.aggregate("v", F.lit(0).cast("bigint"),
-                            lambda a, x: a + x * x))
-            .filter(F.col("nsq") > 0))
-    q = (base.filter(F.pmod(F.col("doc_id"), F.lit(250)) == 0)
-         .select(F.col("doc_id").alias("qid"), F.col("v").alias("qv"),
-                 F.col("nsq").alias("qn")))
-    t = base.select(F.col("doc_id").alias("id"), F.col("v").alias("tv"),
-                    F.col("nsq").alias("tn"))
-    dot = F.aggregate(F.zip_with("qv", "tv", lambda a, b: a * b),
-                      F.lit(0).cast("bigint"), lambda a, x: a + x)
-    joined = t.crossJoin(F.broadcast(q)).select(
-        "qid", "id",
-        (F.lit(1.0) - dot.cast("double")
-         / (F.sqrt(F.col("qn").cast("double"))
-            * F.sqrt(F.col("tn").cast("double")))).alias("d"))
-    from pyspark.sql import Window
-    w = Window.partitionBy("qid").orderBy(F.col("d"), F.col("id"))
-    return (joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 10)
-            .select("qid", "id", F.round("d", 6).alias("dist"), "rank"))
+    base = hy.hashed_corpus(_doc_tokens(spark, sf))
+    joined = hy.targets(base).crossJoin(
+        F.broadcast(hy.declared_queries(base))).select(
+        "qid", "id", hy.int_cosine().alias("d"))
+    return topk_window(joined, 10, dist="d").select(
+        "qid", "id", F.round("d", 6).alias("dist"), "rank")
 
 
 def q_incremental_dedup(spark, sf):
@@ -2818,6 +2793,23 @@ def q_sparse_quantile_recall(spark, sf):
     )
 
 
+def _rrf_top10(lex, vec):
+    """The engine-exact RRF tail of the hybrid declarations: 1/(60+rank)
+    fused top-10, rank as bigint."""
+    fused = rt.rrf_fuse([lex, vec], k=10, k0=60)
+    return fused.select("qid", "doc_id", "score",
+                        F.col("rank").cast("bigint").alias("rank"))
+
+
+def _mmr_top10(leg, doc_id):
+    """The greedy MMR tail (λ=0.5) over a dense leg's candidates:
+    relevance = round(1 − d, 6), ``doc_id`` the leg's id column as doc_id."""
+    cand = leg.select("qid", doc_id,
+                      F.round(F.lit(1.0) - F.col("d"), 6).alias("rel"),
+                      F.col("tv").alias("vec"))
+    return rt.mmr_rerank(cand, k=10, lamb=0.5)
+
+
 def q_hybrid_rrf_topk(spark, sf):
     """Hybrid search: the SAME query documents retrieve through BOTH
     modalities — BM25 over their 3 alphabetically-first terms AND cosine
@@ -2828,21 +2820,31 @@ def q_hybrid_rrf_topk(spark, sf):
     calibration).  Value-oracled end to end: both constituent pipelines
     are the hash-matched bm25_topk / hashed_embed_knn twins, and the
     fusion arithmetic (1/(60+rank) rounded 9 dp, DECIMAL sum, 6-dp fused
-    score, (score desc, id) rank) is engine-exact.  The brute vector leg
-    is the size-enveloped ``_brute_vec_leg`` — retained AS the oracle
-    anchor; past 200k corpus rows it refuses fast and points at
-    hybrid_rrf_scale (VERDICT r8 "what's wrong" #1).  Both legs derive
-    from one shared tokenized corpus (r12 — was: three tokenize
-    passes across postings/stats/embeddings)."""
+    score, (score desc, id) rank) is engine-exact.  The vector leg is the
+    size-enveloped ``hybrid.brute_leg`` — retained AS the oracle anchor;
+    past 200k corpus rows it refuses fast and points at hybrid_rrf_scale.
+    Both legs derive from one shared tokenized corpus."""
     tkf = _doc_tokens(spark, sf)
-    lex = _lex_leg(spark, sf, k=20, tk=tkf)
-    vec = _brute_vec_leg(
-        spark, sf, out_k=20, twin="hybrid_rrf_scale",
-        base=_hashed_base_int(spark, sf, persist=True, tk=tkf)).select(
+    lex = _lex_leg(spark, sf, tkf)
+    base = hy.hashed_corpus(tkf).persist()
+    vec = hy.brute_leg(base, 20, twin="hybrid_rrf_scale").select(
         "qid", "doc_id", "rank")
-    fused = rt.rrf_fuse([lex, vec], k=10, k0=60)
-    return fused.select("qid", "doc_id", "score",
-                        F.col("rank").cast("bigint").alias("rank"))
+    return _rrf_top10(lex, vec)
+
+
+def _sparse_lex_corpus(spark, sf):
+    """``(docs, qids, tk, wpost)`` for the sparse+dense hybrids: the wide
+    corpus, the ``doc_id % 250 = 0`` query ids, the shared token frame and
+    the persisted TF-IDF weighted postings built from it."""
+    from bigvectorbench_spark.operators import sparse as sp
+
+    docs = _docs_wide(spark, sf)
+    qids = load_table(spark, sf, "documents").filter("doc_id % 250 = 0").select(
+        F.col("doc_id").alias("qid"))
+    tkf = _doc_tokens(spark, sf)
+    wpost = sp.sparse_postings(
+        docs, post=sp.lexical_postings(docs, tk=tkf)).persist()
+    return docs, qids, tkf, wpost
 
 
 def q_hybrid_sparse_rrf(spark, sf):
@@ -2861,24 +2863,16 @@ def q_hybrid_sparse_rrf(spark, sf):
     SCALE_SPARSE_r8.json), the dense leg's is the BQ-indexed candidate
     stage hybrid_rrf_scale already runs through the same rrf_fuse — this
     query pins the multi-FIELD composition semantics at oracle scale.
-    The dense leg rides the size-enveloped ``_brute_vec_leg`` anchor."""
+    The dense leg rides the size-enveloped ``hybrid.brute_leg`` anchor."""
     from bigvectorbench_spark.operators import sparse as sp
 
-    docs = _docs_wide(spark, sf)
-    qids = load_table(spark, sf, "documents").filter("doc_id % 250 = 0").select(
-        F.col("doc_id").alias("qid"))
-    tkf = _doc_tokens(spark, sf)
-    wpost = sp.sparse_postings(
-        docs, post=sp.lexical_postings(docs, tk=tkf)).persist()
+    docs, qids, tkf, wpost = _sparse_lex_corpus(spark, sf)
     lex = sp.sparse_topk(docs, qids, k=20, wpost=wpost).select(
         "qid", "doc_id", "rank")
-    vec = _brute_vec_leg(
-        spark, sf, out_k=20, twin="hybrid_sparse_scale",
-        base=_hashed_base_int(spark, sf, persist=True, tk=tkf)).select(
+    base = hy.hashed_corpus(tkf).persist()
+    vec = hy.brute_leg(base, 20, twin="hybrid_sparse_scale").select(
         "qid", "doc_id", "rank")
-    fused = rt.rrf_fuse([lex, vec], k=10, k0=60)
-    return fused.select("qid", "doc_id", "score",
-                        F.col("rank").cast("bigint").alias("rank"))
+    return _rrf_top10(lex, vec)
 
 
 def q_hybrid_sparse_scale(spark, sf):
@@ -2895,30 +2889,20 @@ def q_hybrid_sparse_scale(spark, sf):
     so the 100× multi-field plan is hash-checked end to end, not just
     overlap-gated."""
     from bigvectorbench_spark.operators import sparse as sp
-
-    docs = _docs_wide(spark, sf)
-    qids = load_table(spark, sf, "documents").filter("doc_id % 250 = 0").select(
-        F.col("doc_id").alias("qid"))
-    tkf = _doc_tokens(spark, sf)
-    wpost = sp.sparse_postings(
-        docs, post=sp.lexical_postings(docs, tk=tkf)).persist()
-    # n_docs from the parquet footer (table_rows) — the same exact count
-    # load_table(...).count() ran as a full-table job (r13; the statistic
-    # a cluster catalog serves, the table_rows convention).
+    # n_docs from the parquet footer (table_rows) — the statistic a
+    # cluster catalog serves, instead of a full-table count job.
     from bigvectorbench_spark.sources.tables import table_rows
 
+    docs, qids, tkf, wpost = _sparse_lex_corpus(spark, sf)
     lex = sp.sparse_topk(
         docs, qids, k=20,
         wpost=sp.prune_postings(
             wpost, n_docs=table_rows(sf, "documents")),
         qwpost=wpost).select("qid", "doc_id", "rank")
-    vec = _bq_vec_leg(
-        spark, sf, out_k=20,
-        base=_hashed_base_int(spark, sf, persist=True, tk=tkf)).select(
+    base = hy.hashed_corpus(tkf).persist()
+    vec = hy.bq_leg(base, 20).select(
         "qid", F.col("id").alias("doc_id"), "rank")
-    fused = rt.rrf_fuse([lex, vec], k=10, k0=60)
-    return fused.select("qid", "doc_id", "score",
-                        F.col("rank").cast("bigint").alias("rank"))
+    return _rrf_top10(lex, vec)
 
 
 def q_mmr_rerank(spark, sf):
@@ -2933,13 +2917,10 @@ def q_mmr_rerank(spark, sf):
     re-derives candidates+vectors in DuckDB and runs the SAME numpy greedy
     (mmr_select_numpy, shared code), embedding the selections — the
     ivf_knn independent-recomputation pattern.  Candidates come from the
-    size-enveloped ``_brute_vec_leg`` anchor — past 200k corpus rows it
+    size-enveloped ``hybrid.brute_leg`` anchor — past 200k corpus rows it
     refuses fast and points at mmr_scale."""
-    cand = _brute_vec_leg(spark, sf, out_k=30, twin="mmr_scale").select(
-        "qid", "doc_id",
-        F.round(F.lit(1.0) - F.col("d"), 6).alias("rel"),
-        F.col("tv").alias("vec"))
-    return rt.mmr_rerank(cand, k=10, lamb=0.5)
+    base = hy.hashed_corpus(_doc_tokens(spark, sf)).persist()
+    return _mmr_top10(hy.brute_leg(base, 30, twin="mmr_scale"), "doc_id")
 
 
 def _doc_tokens(spark, sf):
@@ -2958,198 +2939,19 @@ def _doc_tokens(spark, sf):
         "doc_id", tx.tokens(F.col("text")).alias("tk"))
 
 
-def _hashed_base_int(spark, sf, *, persist: bool = False, tk=None):
-    """The derived hashed-embedding corpus (EXACT-INTEGER vectors) shared
-    by the hybrid/MMR declarations: (doc_id, v, nsq) with zero-norm rows
-    dropped.  Each stage materializes in its own select (the
-    q_hashed_embed_knn fold-reuse discipline).
-
-    ``persist=True`` marks the corpus a stage boundary (the
-    corpus_curation/retrieval_eval discipline): the BQ leg references it
-    four times (fit collect, encode scan, query block, refine scan), and
-    without the boundary each reference re-runs the md5 embedding fold —
-    measured 20.4s → 11.5s for hybrid_rrf_scale at 50k Zipf docs /
-    200 queries, flipping it from 1.5× OVER the brute twin to 1.8×
-    under (SCALE_RETRIEVAL_r8.json).
-
-    ``tk``: the shared ``(doc_id, tk)`` frame from ``_doc_tokens`` —
-    derives the embedding from the same tokens without re-tokenizing."""
-    from bigvectorbench_spark.functions import embed as em
-
-    src = tk if tk is not None else _docs_wide(spark, sf).select(
-        "doc_id", tx.tokens(F.col("text")).alias("tk"))
-    base = (src
-            .select("doc_id", em.token_hashes(F.col("tk")).alias("th"))
-            .select("doc_id", em.hashed_embedding(F.col("th")).alias("v"))
-            .withColumn("nsq", F.aggregate("v", F.lit(0).cast("bigint"),
-                                           lambda a, x: a + x * x))
-            .filter(F.col("nsq") > 0))
-    return base.persist() if persist else base
-
-
-def _dense_leg_ctx(base):
-    """ONE driver job shared by a hybrid query's dense legs (r13, guide
-    §2.4/§4.5 — the mv_indexed_fused job-fusion pattern applied to the
-    hybrid family per VERDICT r12 ask #1): collect the hashed-embedding
-    corpus id-sorted once, bounded by the BQ fit-sample envelope.  The
-    brute leg's quadratic-envelope row count (``len(ids)``), the BQ
-    per-dimension thresholds (float64 numpy mean over the id-sorted
-    matrix — bit-identical to ``BQIndex.fit(sort_col="id")``, which
-    collects the same rows in the same order and casts bigint→float64
-    exactly as np.array does) and the kernel query block (the
-    ``doc_id % 250 == 0`` slice, scored per-qid so block order is
-    immaterial) all derive from it — replacing three sequential driver
-    jobs (envelope count, fit collect, query-block collect) with one.
-
-    The fit-sample limit keeps the collect bounded at scale exactly like
-    BQIndex.fit; past it ``len(ids)`` reads 1M, which still (correctly)
-    trips the 200k ALL_PAIRS envelope in ``_brute_vec_leg``."""
-    import numpy as np
-
-    from bigvectorbench_spark.operators.bq import MAX_FIT_SAMPLE_ROWS
-
-    rows = (base.select("doc_id", "v").orderBy("doc_id")
-            .limit(MAX_FIT_SAMPLE_ROWS).collect())
-    if not rows:
-        raise ValueError("cannot fit BQIndex on an empty table")
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    V = np.array([r[1] for r in rows], dtype=np.float64)
-    return ids, V
-
-
-def _brute_vec_leg(spark, sf, *, out_k: int, mod: int = 250, base=None,
-                   twin: str = "hybrid_rrf_scale / mmr_scale",
-                   n_rows: int | None = None):
-    """The BRUTE exact-cosine vector leg shared by the hybrid/MMR oracle
-    anchors: every (query, doc) pair scored — O(docs × queries) by
-    construction, so it wears the dedup.py ALL_PAIRS_MAX_ROWS envelope
-    (VERDICT r8 "what's wrong" #1): a corpus past the envelope refuses
-    fast with a pointer at the declared indexed twins (q_hybrid_rrf_scale
-    / q_mmr_scale run the same fusion/MMR tails over _bq_vec_leg's BQ
-    candidate scan + exact integer refine) instead of silently launching
-    the quadratic job.  Within the envelope it is the full value-oracle
-    anchor: exact integer dot/norms, 4-IEEE-op cosine distance, (d, id)
-    rank — identical arithmetic to the inline forms it replaced.
-
-    ``twin`` names the declared indexed counterpart of the CALLER so the
-    refusal steers users at the right scale path per call site (ADVICE
-    r9 #1 — q_hybrid_sparse_rrf's twin is hybrid_sparse_scale, not the
-    dense pair).
-
-    ``n_rows``: the base corpus row count when the caller already holds it
-    (the ``_dense_leg_ctx`` fused prelude) — skips the envelope count job.
-
-    Returns (qid, doc_id, tv, d, rank) with rank <= out_k."""
-    if base is None:
-        base = _hashed_base_int(spark, sf, persist=True)
-    if n_rows is None:
-        n_rows = base.count()
-    if n_rows > dd.ALL_PAIRS_MAX_ROWS:
-        raise ValueError(
-            f"brute hybrid/MMR vector leg is O(docs × queries) "
-            f"({n_rows} rows > {dd.ALL_PAIRS_MAX_ROWS}) — use the indexed "
-            f"twin ({twin}: BQ candidate scan + "
-            "exact integer refine) at this size")
-    qv = (base.filter(F.pmod(F.col("doc_id"), F.lit(mod)) == 0)
-          .select(F.col("doc_id").alias("qid"), F.col("v").alias("qv"),
-                  F.col("nsq").alias("qn")))
-    tv = base.select(F.col("doc_id").alias("id"), F.col("v").alias("tv"),
-                     F.col("nsq").alias("tn"))
-    dot = F.aggregate(F.zip_with("qv", "tv", lambda a, b: a * b),
-                      F.lit(0).cast("bigint"), lambda a, x: a + x)
-    joined = tv.crossJoin(F.broadcast(qv)).select(
-        "qid", F.col("id").alias("doc_id"), "tv",
-        (F.lit(1.0) - dot.cast("double")
-         / (F.sqrt(F.col("qn").cast("double"))
-            * F.sqrt(F.col("tn").cast("double")))).alias("d"))
-    from pyspark.sql import Window
-    w = Window.partitionBy("qid").orderBy(F.col("d"), F.col("doc_id"))
-    return (joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= out_k))
-
-
-def _bq_vec_leg(spark, sf, *, out_k: int, overfetch: int = 8, base=None,
-                ctx=None):
-    """The INDEXED vector leg of the scale-path hybrid (VERDICT r7 #2 —
-    the reference's hybrid is per-field ANN subqueries, not brute:
-    milvus/module.py:422-458): BQ hamming pre-rank over the derived
-    hashed embeddings (1-bit/dim codes — 1/64th the scan width of the
-    integer vectors), then an EXACT-INTEGER cosine re-rank of the
-    k·overfetch survivors.  This replaces q_hybrid_rrf_topk's brute
-    crossJoin (O(n·q) per run) with O(n·q/64) candidate scan + O(q·k·
-    overfetch) refine — measured 1.6× under brute at 500k rows and
-    2.9×/decade vs 4.1× (SCALE_RETRIEVAL_r7.json).
-
-    Deterministic end to end: the BQ fit is the id-sorted float64 mean
-    (BQIndex.fit contract), the hamming pre-rank breaks ties by ascending
-    id (pinned kernel==expr==lexsort in test_bq), and the refine is the
-    integer-exact cosine of q_hashed_embed_knn — so the leg takes a FULL
-    value oracle (candidates recomputed at oracle-gen time and re-scored
-    by DuckDB with the same integer folds).
-
-    ``ctx``: the ``_dense_leg_ctx`` (ids, V) pair when the caller shares
-    it across legs (hybrid_rrf_parity); built here otherwise — either
-    way the fit thresholds and the kernel query block ride ONE driver
-    collect instead of two sequential jobs (r13, VERDICT r12 ask #1).
-
-    Returns (qid, id, tv, d, rank) with rank ≤ out_k."""
-    import numpy as np
-
-    if base is None:
-        base = _hashed_base_int(spark, sf, persist=True)
-    if ctx is None:
-        ctx = _dense_leg_ctx(base)
-    ids, V = ctx
-    fvec = base.select(F.col("doc_id").alias("id"),
-                       F.col("v").cast("array<double>").alias("vec"))
-    # Identical thresholds to BQIndex.fit(fvec, sort_col="id"): the ctx
-    # matrix IS the id-sorted float64 cast of the same rows.
-    bq = BQIndex(thresholds=[float(x) for x in V.mean(axis=0)])
-    codes = bq.encode(fvec, keep=["id"])
-    qv_int = base.filter(F.pmod(F.col("doc_id"), F.lit(250)) == 0).select(
-        F.col("doc_id").alias("qid"), F.col("v").alias("qv"),
-        F.col("nsq").alias("qn"))
-    qmask = np.mod(ids, 250) == 0
-    cand = bq.search(codes, None, k=out_k * overfetch,
-                     qblock=(ids[qmask], V[qmask])).select("qid", "id")
-    tv = base.select(F.col("doc_id").alias("id"), F.col("v").alias("tv"),
-                     F.col("nsq").alias("tn"))
-    dot = F.aggregate(F.zip_with("qv", "tv", lambda a, b: a * b),
-                      F.lit(0).cast("bigint"), lambda a, x: a + x)
-    refined = (F.broadcast(cand).join(tv, "id")
-               .join(F.broadcast(qv_int), "qid")
-               .select("qid", "id", "tv",
-                       (F.lit(1.0) - dot.cast("double")
-                        / (F.sqrt(F.col("qn").cast("double"))
-                           * F.sqrt(F.col("tn").cast("double")))).alias("d")))
-    from pyspark.sql import Window
-    w = Window.partitionBy("qid").orderBy(F.col("d"), F.col("id"))
-    return (refined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= out_k))
-
-
-def _lex_leg(spark, sf, k: int = 20, tk=None):
-    """The shared BM25 lexical leg of the hybrid declarations.
-
-    ``tk``: the shared ``(doc_id, tk)`` frame from ``_doc_tokens`` — the
-    postings, the corpus stats AND the query term slices all derive from
-    it, so the leg adds ZERO tokenize passes to a hybrid query that
-    already tokenized for its dense leg (was: one for postings + one for
-    corpus_stats + one for the query slice)."""
+def _lex_leg(spark, sf, tk):
+    """The shared BM25 lexical leg of the hybrid declarations: top-20 over
+    each query document's 3 alphabetically-first terms.  The postings,
+    the corpus stats AND the query term slices all derive from ``tk``, the
+    shared ``(doc_id, tk)`` frame from ``_doc_tokens``, so the leg adds
+    ZERO tokenize passes to a hybrid query that already tokenized for its
+    dense leg."""
     docs = _docs_wide(spark, sf)
-    if tk is None:
-        queries_lex = load_table(spark, sf, "documents").filter(
-            "doc_id % 250 = 0").select(
-            F.col("doc_id").alias("qid"),
-            F.slice(F.array_sort(F.array_distinct(tx.tokens(F.col("text")))),
-                    1, 3).alias("terms"))
-        return rt.bm25_topk(docs, queries_lex, k=k).select(
-            "qid", "doc_id", "rank")
     queries_lex = tk.filter("doc_id % 250 = 0").select(
         F.col("doc_id").alias("qid"),
         F.slice(F.array_sort(F.array_distinct(F.col("tk"))), 1, 3)
         .alias("terms"))
-    return rt.bm25_topk(docs, queries_lex, k=k, post=rt.postings(docs, tk=tk),
+    return rt.bm25_topk(docs, queries_lex, k=20, post=rt.postings(docs, tk=tk),
                         stats=rt.corpus_stats(docs, tk=tk)).select(
         "qid", "doc_id", "rank")
 
@@ -3157,22 +2959,19 @@ def _lex_leg(spark, sf, k: int = 20, tk=None):
 def q_hybrid_rrf_scale(spark, sf):
     """The 100× form of q_hybrid_rrf_topk: the SAME BM25 lexical leg and
     RRF fusion tail, with the vector candidate leg served by the BQ index
-    instead of the brute corpus-wide crossJoin (VERDICT r7 #2).  Fully
+    (``hybrid.bq_leg``) instead of the brute corpus-wide crossJoin.  Fully
     value-oracled: the deterministic BQ candidate sets are recomputed at
     oracle-generation time (id-sorted mean fit + (hamming, id) lexsort —
     the bq_knn convention) and embedded as literals; DuckDB re-runs the
     integer-cosine refine, the BM25 CTEs and the RRF rounding ladder on
     top, so fused scores and ranks hash-match end to end.  Both legs
-    derive from one shared tokenized corpus (r12)."""
+    derive from one shared tokenized corpus."""
     tkf = _doc_tokens(spark, sf)
-    lex = _lex_leg(spark, sf, k=20, tk=tkf)
-    vec = _bq_vec_leg(
-        spark, sf, out_k=20,
-        base=_hashed_base_int(spark, sf, persist=True, tk=tkf)).select(
+    lex = _lex_leg(spark, sf, tkf)
+    base = hy.hashed_corpus(tkf).persist()
+    vec = hy.bq_leg(base, 20).select(
         "qid", F.col("id").alias("doc_id"), "rank")
-    fused = rt.rrf_fuse([lex, vec], k=10, k0=60)
-    return fused.select("qid", "doc_id", "score",
-                        F.col("rank").cast("bigint").alias("rank"))
+    return _rrf_top10(lex, vec)
 
 
 def q_hybrid_rrf_parity(spark, sf):
@@ -3189,18 +2988,16 @@ def q_hybrid_rrf_parity(spark, sf):
     defect-only floor 0.4/0.1."""
     mean_thr, min_thr = _gate(sf, tight=(0.7, 0.5), floor=(0.4, 0.1))
     tkf = _doc_tokens(spark, sf)
-    lex = _lex_leg(spark, sf, k=20, tk=tkf)
-
-    base = _hashed_base_int(spark, sf, persist=True, tk=tkf)
-    # One driver collect for BOTH legs (r13): envelope count, BQ fit and
-    # kernel query block all derive from _dense_leg_ctx (was 3 jobs).
-    ids, V = _dense_leg_ctx(base)
-    brute_vec = _brute_vec_leg(spark, sf, out_k=20, base=base,
-                               twin="hybrid_rrf_scale",
-                               n_rows=len(ids)).select(
+    lex = _lex_leg(spark, sf, tkf)
+    base = hy.hashed_corpus(tkf).persist()
+    # One driver collect for BOTH legs: the envelope count, the BQ fit and
+    # the kernel query block all derive from the dense-leg context.
+    ctx = hy.dense_leg_ctx(base)
+    brute_vec = hy.brute_leg(
+        base, 20, twin="hybrid_rrf_scale",
+        n_rows=len(ctx.ids) if ctx.complete else None).select(
         "qid", "doc_id", "rank")
-    bq_vec = _bq_vec_leg(spark, sf, out_k=20, base=base,
-                         ctx=(ids, V)).select(
+    bq_vec = hy.bq_leg(base, 20, ctx=ctx).select(
         "qid", F.col("id").alias("doc_id"), "rank")
 
     fused_brute = rt.rrf_fuse([lex, brute_vec], k=10, k0=60)
@@ -3223,15 +3020,11 @@ def q_mmr_scale(spark, sf):
     """The 100× form of q_mmr_rerank: the SAME greedy MMR tail
     (mmr_select_numpy, value-oracled) re-ranking the BQ-indexed leg's
     top-30 instead of the brute crossJoin's — the candidate stage
-    q_hybrid_rrf_scale declares, reused (VERDICT r7 #2).  Fully
-    value-oracled: the oracle recomputes the BQ candidates + integer
-    cosine re-rank in DuckDB and runs the SAME numpy greedy, embedding
-    the selections."""
-    cand = _bq_vec_leg(spark, sf, out_k=30).select(
-        "qid", F.col("id").alias("doc_id"),
-        F.round(F.lit(1.0) - F.col("d"), 6).alias("rel"),
-        F.col("tv").alias("vec"))
-    return rt.mmr_rerank(cand, k=10, lamb=0.5)
+    q_hybrid_rrf_scale declares, reused.  Fully value-oracled: the oracle
+    recomputes the BQ candidates + integer cosine re-rank in DuckDB and
+    runs the SAME numpy greedy, embedding the selections."""
+    base = hy.hashed_corpus(_doc_tokens(spark, sf)).persist()
+    return _mmr_top10(hy.bq_leg(base, 30), F.col("id").alias("doc_id"))
 
 
 def q_iud_final_state(spark, sf):

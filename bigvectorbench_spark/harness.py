@@ -284,75 +284,41 @@ def _run_hybrid():
     hybrid = per-field ANN subqueries merged by a ranker,
     milvus/module.py:422-458): the vector splits into two half-dimension
     fields (the mv_knn convention), each field retrieves its own top-2k
-    run — brute exact or BQ-indexed per the build knob ``leg`` — and
-    Reciprocal Rank Fusion merges them (query knobs ``k0`` and ``w2``,
-    the second field's weight).  Scored against the FULL-vector exact
-    ground truth, so the metrics CSV gets honest recall/QPS Pareto points
-    for fusion configs (VERDICT r7 ask #6)."""
-    from pyspark.sql import functions as _F
-
-    def _split(df, half, d, vec_col="vec"):
-        a = df.select("id", _F.slice(vec_col, 1, half).alias("vec"))
-        b = df.select("id", _F.slice(vec_col, half + 1, d - half).alias("vec"))
+    run — through the ``flat-expr`` or the ``bq`` runner per the build
+    knob ``leg`` — and Reciprocal Rank Fusion merges them (query knobs
+    ``k0`` and ``w2``, the second field's weight).  Scored against the
+    FULL-vector exact ground truth, so the metrics CSV gets honest
+    recall/QPS Pareto points for fusion configs."""
+    def _split(df, half, d):
+        a = df.select("id", F.slice("vec", 1, half).alias("vec"))
+        b = df.select("id", F.slice("vec", half + 1, d - half).alias("vec"))
         return a, b
 
     def _build(train, args):
         d = train.select(F.size("vec")).first()[0]
         half = d // 2
-        t1, t2 = _split(train, half, d)
         leg = str(args.get("leg", "bq"))
-        if leg == "brute":
-            return ("brute", half, d, (t1,), (t2,))
-        if leg != "bq":
+        if leg not in ("brute", "bq"):
             raise ValueError(f"unknown hybrid leg {leg!r}; expected brute|bq")
-        from bigvectorbench_spark.operators.bq import BQIndex
-
-        arts = []
-        for t in (t1, t2):
-            idx = BQIndex.fit(t, sort_col="id")
-            codes = idx.encode(t, keep=["id"]).cache()
-            codes.count()  # materialize: encode cost belongs to build_time
-            arts.append((idx, codes, t))
-        return ("bq", half, d, arts[0], arts[1])
+        build, search = _run_flat("expr") if leg == "brute" else _run_bq()
+        return search, half, d, [build(t, {}) for t in _split(train, half, d)]
 
     def _search(art, queries, count, qargs):
         from bigvectorbench_spark.operators import retrieval as rt
 
-        leg, half, d, a1, a2 = art
+        search, half, d, arts = art
         k0 = float(qargs.get("k0", 60))
         w2 = float(qargs.get("w2", 1.0))
-        k_leg = count * 2
-        q1, q2 = _split(queries.withColumnRenamed("qid", "id"), half, d)
-        runs = []
-        for (qi, ai) in ((q1, a1), (q2, a2)):
-            qi = qi.withColumnRenamed("id", "qid")
-            if leg == "brute":
-                r = knn(ai[0], qi, k=k_leg, method="expr")
-            else:
-                idx, codes, t = ai
-                r = idx.search(codes, qi, k=k_leg, refine_train=t, overfetch=4)
-            runs.append(r.select("qid", F.col("id").alias("doc_id"), "rank"))
+        fields = _split(queries.withColumnRenamed("qid", "id"), half, d)
+        runs = [search(a, q.withColumnRenamed("id", "qid"), count * 2, {})
+                .select("qid", F.col("id").alias("doc_id"), "rank")
+                for a, q in zip(arts, fields)]
         fused = rt.rrf_fuse(runs, k=count, k0=int(k0), weights=[1.0, w2])
         return fused.select(
             "qid", F.col("doc_id").alias("id"),
             (-F.col("score")).alias("dist"), F.col("rank").cast("int"))
 
     return _build, _search
-
-
-def _hashed_text_vectors(df: DataFrame, id_col: str) -> DataFrame:
-    """Derived dense vectors for text rows — the hashed-embedding fold
-    (functions/embed.py): (id, v int array, nsq), zero-norm rows dropped."""
-    from bigvectorbench_spark.functions import embed as em
-    from bigvectorbench_spark.functions import text as tx
-
-    return (df
-            .select(F.col(id_col).alias("id"), tx.tokens(F.col("text")).alias("tk"))
-            .select("id", em.token_hashes(F.col("tk")).alias("th"))
-            .select("id", em.hashed_embedding(F.col("th")).alias("v"))
-            .withColumn("nsq", F.aggregate("v", F.lit(0).cast("bigint"),
-                                           lambda a, x: a + x * x))
-            .filter(F.col("nsq") > 0))
 
 
 def sparse_exact_groundtruth(train: DataFrame, queries: DataFrame,
@@ -408,91 +374,51 @@ def _run_sparse():
 def _run_sparse_hybrid():
     """Sparse+dense multi-field hybrid through the grid harness (the
     Milvus 2.4 SPARSE_FLOAT_VECTOR + dense field form the declared
-    hybrid_sparse_rrf pins at oracle scale): the sparse leg retrieves
-    top-2k through the (optionally impact-pruned) inverted index, the
-    dense leg through cosine over derived hashed embeddings — brute or
-    BQ-indexed per the ``leg`` knob — and RRF merges them (query knobs
-    ``k0`` and ``w2``).  Scored against the exact SPARSE ground truth, so
-    the metrics CSV shows what the dense field adds/costs against the
-    lexical truth."""
+    hybrid_sparse_rrf pins at oracle scale): the sparse leg is the
+    ``sparse`` runner's top-2k (optionally impact-pruned index), the dense
+    leg cosine over derived hashed embeddings (operators/hybrid.py) —
+    brute or BQ-indexed per the ``leg`` knob — and RRF merges them (query
+    knobs ``k0`` and ``w2``).  Scored against the exact SPARSE ground
+    truth, so the metrics CSV shows what the dense field adds/costs
+    against the lexical truth."""
+    from bigvectorbench_spark.functions import text as tx
+    from bigvectorbench_spark.operators import hybrid as hy
     from bigvectorbench_spark.operators import retrieval as rt
-    from bigvectorbench_spark.operators import sparse as sp
+
+    sparse_build, sparse_search = _run_sparse()
 
     def _build(train, args):
-        post = sp.lexical_postings(train, id_col="id", text_col="text").cache()
-        wpost = sp.sparse_postings(train, post=post)
-        m = args.get("m", "auto")
-        idx = wpost if m in (0, "0", None, "exact") else sp.prune_postings(
-            wpost, m=m)
-        idx = idx.cache()
-        idx.count()
-        vecs = _hashed_text_vectors(train, "id").cache()
+        lex = sparse_build(train, args)
+        vecs = hy.hashed_corpus(train.select(
+            F.col("id").alias("doc_id"),
+            tx.tokens(F.col("text")).alias("tk"))).cache()
         leg = str(args.get("leg", "brute"))
         if leg == "brute":
-            # The brute dense leg is an O(docs × queries) crossJoin — same
-            # ALL_PAIRS envelope as the entry-level brute legs (ADVICE r9
-            # #3): refuse fast past the cap instead of silently launching
-            # the quadratic job from the CLI grid.
-            from bigvectorbench_spark.operators import dedup as dd
-
-            n_rows = vecs.count()
-            if n_rows > dd.ALL_PAIRS_MAX_ROWS:
-                raise ValueError(
-                    f"sparse-hybrid brute dense leg is O(docs × queries) "
-                    f"({n_rows} rows > {dd.ALL_PAIRS_MAX_ROWS}) — run "
-                    "--algorithm sparse-hybrid with leg=bq (BQ candidate "
-                    "scan + exact refine) at this size")
-            return post, idx, ("brute", vecs)
+            # refuse at build time, before the grid times any search
+            hy.check_all_pairs(vecs.count(),
+                               "--algorithm sparse-hybrid with leg=bq")
+            return lex, lambda qv, k: hy.cosine_topk(vecs, qv, k).select(
+                "qid", "doc_id", "rank")
         if leg != "bq":
             raise ValueError(f"unknown dense leg {leg!r}; expected brute|bq")
-        from bigvectorbench_spark.operators.bq import BQIndex
-
-        fvec = vecs.select("id", F.col("v").cast("array<double>").alias("vec"))
-        bq = BQIndex.fit(fvec, sort_col="id")
-        codes = bq.encode(fvec, keep=["id"]).cache()
+        bq, codes = hy.bq_index(vecs, hy.dense_leg_ctx(vecs))
+        codes = codes.cache()
         codes.count()
-        return post, idx, ("bq", vecs, bq, codes)
+        return lex, lambda qv, k: hy.bq_refine(
+            bq, codes, vecs, qv, k, 4).select(
+            "qid", F.col("id").alias("doc_id"), "rank")
 
     def _search(art, queries, count, qargs):
-        post, idx, dense = art
-        k0 = int(qargs.get("k0", 60))
-        w2 = float(qargs.get("w2", 1.0))
+        lex_art, dense_leg = art
         k_leg = count * 2
-        qw = sp.text_query_weights(queries, post, qid_col="qid",
-                                   text_col="text")
-        lex = sp.sparse_topk(None, queries, k=k_leg, wpost=idx,
-                             qweights=qw).select("qid", "doc_id", "rank")
-        qv = _hashed_text_vectors(queries, "qid").select(
-            F.col("id").alias("qid"), F.col("v").alias("qv"),
-            F.col("nsq").alias("qn"))
-        dot = F.aggregate(F.zip_with("qv", "tv", lambda a, b: a * b),
-                          F.lit(0).cast("bigint"), lambda a, x: a + x)
-        dist = (F.lit(1.0) - dot.cast("double")
-                / (F.sqrt(F.col("qn").cast("double"))
-                   * F.sqrt(F.col("tn").cast("double"))))
-        if dense[0] == "brute":
-            tv = dense[1].select(F.col("id").alias("doc_id"),
-                                 F.col("v").alias("tv"),
-                                 F.col("nsq").alias("tn"))
-            joined = tv.crossJoin(F.broadcast(qv)).select(
-                "qid", "doc_id", dist.alias("d"))
-        else:
-            _, vecs, bq, codes = dense
-            qvec = qv.select("qid", F.col("qv").cast("array<double>")
-                             .alias("vec"))
-            cand = bq.search(codes, qvec, k=k_leg * 4).select("qid", "id")
-            tv = vecs.select(F.col("id"), F.col("v").alias("tv"),
-                             F.col("nsq").alias("tn"))
-            joined = (F.broadcast(cand).join(tv, "id")
-                      .join(F.broadcast(qv), "qid")
-                      .select("qid", F.col("id").alias("doc_id"),
-                              dist.alias("d")))
-        from pyspark.sql import Window
-        w = Window.partitionBy("qid").orderBy(F.col("d"), F.col("doc_id"))
-        vec = (joined.withColumn("rank", F.row_number().over(w))
-               .filter(F.col("rank") <= k_leg)
-               .select("qid", "doc_id", "rank"))
-        fused = rt.rrf_fuse([lex, vec], k=count, k0=k0, weights=[1.0, w2])
+        lex = sparse_search(lex_art, queries, k_leg, {}).select(
+            "qid", F.col("id").alias("doc_id"), "rank")
+        qv = hy.hashed_corpus(queries.select(
+            "qid", tx.tokens(F.col("text")).alias("tk"))).select(
+            "qid", F.col("v").alias("qv"), F.col("nsq").alias("qn"))
+        fused = rt.rrf_fuse([lex, dense_leg(qv, k_leg)], k=count,
+                            k0=int(qargs.get("k0", 60)),
+                            weights=[1.0, float(qargs.get("w2", 1.0))])
         return fused.select("qid", F.col("doc_id").alias("id"),
                             (-F.col("score")).alias("dist"),
                             F.col("rank").cast("int"))

@@ -29,11 +29,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from bigvectorbench_spark import get_spark
-from bigvectorbench_spark.functions import embed as em
 from bigvectorbench_spark.functions import text as tx
+from bigvectorbench_spark.operators import hybrid as hy
 from bigvectorbench_spark.operators import retrieval as rt
 from bigvectorbench_spark.operators.bq import BQIndex
 from bigvectorbench_spark.operators.classifier import QualityClassifier
@@ -82,13 +82,8 @@ def measure(spark, n: int, root: str) -> dict:
     post = rt.postings(docs).persist()
     post.count()
     stats = rt.stats_from_postings(post)
-    base = (docs
-            .select("doc_id", tx.tokens(F.col("text")).alias("tk"))
-            .select("doc_id", em.token_hashes(F.col("tk")).alias("th"))
-            .select("doc_id", em.hashed_embedding(F.col("th")).alias("v"))
-            .withColumn("nsq", F.aggregate("v", F.lit(0).cast("bigint"),
-                                           lambda a, x: a + x * x))
-            .filter(F.col("nsq") > 0)).persist()
+    base = hy.hashed_corpus(docs.select(
+        "doc_id", tx.tokens(F.col("text")).alias("tk"))).persist()
     base.count()
     fvec = base.select(F.col("doc_id").alias("id"),
                        F.col("v").cast("array<double>").alias("vec")).persist()
@@ -114,23 +109,11 @@ def measure(spark, n: int, root: str) -> dict:
         return rt.bm25_topk(docs, queries_lex, k=20, post=post,
                             stats=stats).select("qid", "doc_id", "rank")
 
-    def _brute_vec_run():
-        tv = base.select(F.col("doc_id").alias("id"), F.col("v").alias("tv"),
-                         F.col("nsq").alias("tn"))
-        dot = F.aggregate(F.zip_with("qv", "tv", lambda a, b: a * b),
-                          F.lit(0).cast("bigint"), lambda a, x: a + x)
-        joined = tv.crossJoin(F.broadcast(qv.select("qid", "qv", "qn"))).select(
-            "qid", "id", "tv",
-            (F.lit(1.0) - dot.cast("double")
-             / (F.sqrt(F.col("qn").cast("double"))
-                * F.sqrt(F.col("tn").cast("double")))).alias("d"))
-        return joined
-
+    # the brute leg runs past the ALL_PAIRS envelope on purpose: the
+    # quadratic plan is what this script measures against the BQ leg
     def _hybrid_brute():
-        w = Window.partitionBy("qid").orderBy(F.col("d"), F.col("id"))
-        vec = (_brute_vec_run().withColumn("rank", F.row_number().over(w))
-               .filter(F.col("rank") <= 20)
-               .select("qid", F.col("id").alias("doc_id"), "rank"))
+        vec = hy.cosine_topk(base, qv.select("qid", "qv", "qn"), 20).select(
+            "qid", "doc_id", "rank")
         rt.rrf_fuse([_lex_run(), vec], k=10).write.format(
             "noop").mode("overwrite").save()
 
@@ -146,12 +129,9 @@ def measure(spark, n: int, root: str) -> dict:
     out["hybrid_bq_s"], out["hybrid_bq_runs"] = best_of(_hybrid_bq)
 
     def _mmr():
-        w = Window.partitionBy("qid").orderBy(F.col("d"), F.col("id"))
-        cand = (_brute_vec_run().withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= 30)
-                .select("qid", F.col("id").alias("doc_id"),
-                        F.round(F.lit(1.0) - F.col("d"), 6).alias("rel"),
-                        F.col("tv").alias("vec")))
+        cand = hy.cosine_topk(base, qv.select("qid", "qv", "qn"), 30).select(
+            "qid", "doc_id", F.round(F.lit(1.0) - F.col("d"), 6).alias("rel"),
+            F.col("tv").alias("vec"))
         rt.mmr_rerank(cand, k=10).write.format(
             "noop").mode("overwrite").save()
 

@@ -276,10 +276,10 @@ def test_search_qblock_matches_collect_path(spark):
 
 
 def test_fused_ctx_thresholds_match_fit(spark):
-    """__spark_entry__._dense_leg_ctx's float64 mean over the id-sorted
-    collected matrix must reproduce BQIndex.fit(sort_col='id') bit for bit
-    (the fused hybrid prelude replaces the fit collect with it)."""
-    import __spark_entry__ as entry
+    """hybrid.dense_leg_ctx's float64 mean over the id-sorted collected
+    matrix must reproduce BQIndex.fit(sort_col='id') bit for bit (the
+    fused hybrid prelude replaces the fit collect with it)."""
+    from bigvectorbench_spark.operators import hybrid as hy
 
     rng = np.random.RandomState(7)
     V = rng.randint(-50, 50, size=(60, 16)).astype(np.int64)
@@ -287,7 +287,7 @@ def test_fused_ctx_thresholds_match_fit(spark):
         [(i, [int(x) for x in V[i]], int((V[i] ** 2).sum()))
          for i in range(len(V))],
         "doc_id bigint, v array<bigint>, nsq bigint")
-    ids, M = entry._dense_leg_ctx(base)
+    ids, M, _ = hy.dense_leg_ctx(base)
     assert list(ids) == list(range(60))
     fit = BQIndex.fit(
         base.select("doc_id",

@@ -147,3 +147,35 @@ def test_brute_hybrid_mmr_legs_refuse_at_scale(spark, sf_dir, monkeypatch):
                     (entry.q_mmr_rerank, "mmr_scale")):
         with pytest.raises(ValueError, match=twin):
             q(spark, sf_dir)
+
+
+def test_bq_legs_answer_every_query_past_the_fit_cap(spark, sf_dir,
+                                                     monkeypatch):
+    """Past ``bq.MAX_FIT_SAMPLE_ROWS`` the dense-leg context holds only the
+    first cap rows of the hashed corpus.  The BQ legs must still answer
+    every declared query (doc_id % 250 == 0 with a non-zero embedding):
+    the thresholds come from the capped sample, the query block from the
+    query frame — never from the truncated collect."""
+    from pyspark.sql import functions as F
+
+    from bigvectorbench_spark.functions import text as tx
+    from bigvectorbench_spark.operators import bq
+    from bigvectorbench_spark.operators import hybrid as hy
+    from bigvectorbench_spark.sources.tables import table_rows
+
+    want = {r["qid"] for r in entry.q_hashed_embed_knn(spark, sf_dir)
+            .select("qid").distinct().collect()}
+    assert len(want) >= 2
+    assert table_rows(sf_dir, "documents") > 100
+    monkeypatch.setattr(bq, "MAX_FIT_SAMPLE_ROWS", 100)
+    for q in (entry.q_hybrid_rrf_scale, entry.q_mmr_scale):
+        got = {r["qid"] for r in q(spark, sf_dir).select("qid")
+               .distinct().collect()}
+        assert got == want, q.__name__
+    # the fused hybrid's lexical leg answers every query on its own, so
+    # check its dense leg directly too
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    base = hy.hashed_corpus(
+        docs.select("doc_id", tx.tokens(F.col("text")).alias("tk")))
+    assert {r["qid"] for r in hy.bq_leg(base, 20).select("qid")
+            .distinct().collect()} == want

@@ -509,13 +509,18 @@ def test_bq_leg_hybrid_has_no_corpus_crossjoin(spark, sf_dir):
     candidate stage is the Arrow hamming kernel (mapInArrow) and every
     join after it (refine, fusion) is a bounded equi-join."""
     import __spark_entry__ as entry
+    from bigvectorbench_spark.functions import text as tx
+    from bigvectorbench_spark.operators import hybrid as hy
 
     full = plan_of(entry.q_hybrid_rrf_scale(spark, sf_dir))
     assert "CartesianProduct" not in full
     # BM25's single-row corpus-stats crossJoin is the ONLY nested-loop
     # join allowed in the fused plan (a scalar broadcast, bounded by
     # construction); the VECTOR leg itself must have none at all.
-    vec = plan_of(entry._bq_vec_leg(spark, sf_dir, out_k=20))
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    base = hy.hashed_corpus(
+        docs.select("doc_id", tx.tokens(F.col("text")).alias("tk")))
+    vec = plan_of(hy.bq_leg(base, 20))
     assert "CartesianProduct" not in vec
     assert "BroadcastNestedLoopJoin" not in vec
     # the brute twin declares exactly that corpus-wide join — the

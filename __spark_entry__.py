@@ -53,8 +53,24 @@ EMB_DIM = 64
 _ORACLE_SF = "sf0.01"
 
 
-def _gate(sf: str, tight: tuple[float, float], floor: tuple[float, float]) -> tuple[float, float]:
-    return tight if _ORACLE_SF in str(sf) else floor
+def _recall_gate(sf: str, per_q: DataFrame, tight: tuple[float, float],
+                 floor: tuple[float, float], *, col: str = "recall",
+                 pinned: bool | None = None) -> DataFrame:
+    """One-row quality gate over a per-query ``(qid, col)`` frame:
+    ``n_queries`` plus the (mean, min) threshold booleans the oracle
+    asserts TRUE — ``tight`` at the oracle sf, the defect-only ``floor``
+    elsewhere.  ``pinned`` (the HNSW gates) adds ``mean_<col>_r2``: the
+    mean rounded to 2 dp where the value was calibrated, NULL elsewhere."""
+    mean_thr, min_thr = tight if _ORACLE_SF in str(sf) else floor
+    out = [
+        F.count("*").alias("n_queries"),
+        (F.avg(col) >= mean_thr).alias(f"mean_{col}_ok"),
+        (F.min(col) >= min_thr).alias(f"min_{col}_ok"),
+    ]
+    if pinned is not None:
+        out.append(F.when(F.lit(pinned), F.round(F.avg(col), 2))
+                   .cast("double").alias(f"mean_{col}_r2"))
+    return per_q.agg(*out)
 
 
 # --------------------------------------------------------------------- helpers
@@ -290,7 +306,6 @@ def q_hnsw_recall(spark, sf):
     from bigvectorbench_spark.operators.hnsw import build_hnsw_shards, hnsw_search
     from bigvectorbench_spark.sources.tables import table_rows
 
-    mean_thr, min_thr = _gate(sf, tight=(0.95, 0.8), floor=(0.7, 0.5))
     t, q = _train(spark, sf), _queries_mod(spark, sf)
     n_rows = table_rows(sf, "embeddings")
     # Bounded ~125-row shards: the calibrated oracle-SF configuration was
@@ -300,19 +315,10 @@ def q_hnsw_recall(spark, sf):
     num_shards = max(4, -(-n_rows // 125))
     shards = build_hnsw_shards(t, m=8, ef_construction=64,
                                num_shards=num_shards, seed=3)
-    approx = hnsw_search(shards, q, k=10, ef=16).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    pinned = n_rows <= 500
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-        F.when(F.lit(pinned), F.round(F.avg("recall"), 2))
-         .cast("double").alias("mean_recall_r2"),
-    )
+    approx = hnsw_search(shards, q, k=10, ef=16)
+    exact = knn(t, q, k=10, method="expr")
+    return _recall_gate(sf, mx.topk_recall(approx, exact), (0.95, 0.8), (0.7, 0.5),
+                        pinned=n_rows <= 500)
 
 
 # Serving-scale HNSW configuration (VERDICT r5 ask #2): shard count tracks
@@ -404,23 +410,13 @@ def q_hnsw_scale_recall(spark, sf):
     # (scripts/scale_hnsw.py, SCALING.md third table) instead of decaying
     # with shard size, so the defect floor tightens.  Still defect-only:
     # a broken build/beam lands far below it.
-    mean_thr, min_thr = _gate(sf, tight=(0.95, 0.8), floor=(0.8, 0.35))
     shards, n_rows = _hnsw_scale_index(spark, sf)
     t = _train(spark, sf)
     q = _queries_block(spark, sf, n_rows)
-    approx = hnsw_search(shards, q, k=10, ef=_HNSW_SCALE_EF).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    pinned = n_rows <= 500
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-        F.when(F.lit(pinned), F.round(F.avg("recall"), 2))
-         .cast("double").alias("mean_recall_r2"),
-    )
+    approx = hnsw_search(shards, q, k=10, ef=_HNSW_SCALE_EF)
+    exact = knn(t, q, k=10, method="expr")
+    return _recall_gate(sf, mx.topk_recall(approx, exact), (0.95, 0.8), (0.8, 0.35),
+                        pinned=n_rows <= 500)
 
 
 def q_knn_jaccard(spark, sf):
@@ -519,7 +515,6 @@ def q_filter_ivf_recall(spark, sf):
     partial degradation (probe ranking, mask, or predicate-join defect)
     fails the gate; off-oracle the defect-only floor is 0.5/0.25, under
     the worst measured healthy tail."""
-    mean_thr, min_thr = _gate(sf, tight=(0.7, 0.45), floor=(0.5, 0.25))
     t = _train(spark, sf)
     q = (_queries_mod(spark, sf)
          .withColumn("lo", F.col("label") - 2)
@@ -529,18 +524,11 @@ def q_filter_ivf_recall(spark, sf):
         idx, idx.assign(t), q, k=10,
         filter_template="label >= {lo} and label <= {hi}",
         query_param_cols=["lo", "hi"], nprobe=4, strategy="auto",
-        selectivity=0.44).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
+        selectivity=0.44)
     exact = filtered_knn(
         t, q, k=10, filter_template="label >= {lo} and label <= {hi}",
-        query_param_cols=["lo", "hi"]).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+        query_param_cols=["lo", "hi"])
+    return _recall_gate(sf, mx.topk_recall(approx, exact), (0.7, 0.45), (0.5, 0.25))
 
 
 def q_mv_knn(spark, sf):
@@ -635,7 +623,6 @@ def q_mv_scale_parity(spark, sf):
     a candidate-stage defect (not only a cratering bug) fails the driver
     gate; off the oracle sfs the gate relaxes to a defect-only floor
     0.5/0.2."""
-    mean_thr, min_thr = _gate(sf, tight=(0.7, 0.5), floor=(0.5, 0.2))
     ent = _mv_entities(spark, sf).persist()
     t = ent.withColumnRenamed("eid", "id")
     q = ent.filter("eid % 25 = 0").withColumnRenamed("eid", "qid")
@@ -643,17 +630,8 @@ def q_mv_scale_parity(spark, sf):
                             per_vector_k=10)
     idxd = mv.mv_indexed_fused(t, q, k=5, weights=[0.25] * 4, num_vectors=4,
                                per_vector_k=10, overfetch=4)
-    a = brute.groupBy("qid").agg(F.collect_list("id").alias("brute_ids"))
-    b = idxd.groupBy("qid").agg(F.collect_list("id").alias("idx_ids"))
-    per = a.join(b, "qid").select(
-        "qid",
-        (F.size(F.array_intersect("brute_ids", "idx_ids"))
-         / F.size("brute_ids")).alias("overlap"))
-    return per.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("overlap") >= mean_thr).alias("mean_overlap_ok"),
-        (F.min("overlap") >= min_thr).alias("min_overlap_ok"),
-    )
+    return _recall_gate(sf, mx.topk_overlap(brute, idxd), (0.7, 0.5), (0.5, 0.2),
+                        col="overlap")
 
 
 def q_mm_knn(spark, sf):
@@ -795,24 +773,15 @@ def q_opq_recall(spark, sf):
     measured floor; off the oracle sf the gate relaxes to 0.4/0.1
     (measured sf0.1: mean 0.497 / min 0.2 — the same published density
     decay at a fixed code budget pq_recall documents)."""
-    mean_thr, min_thr = _gate(sf, tight=(0.65, 0.4), floor=(0.4, 0.1))
     from bigvectorbench_spark.operators.opq import OPQIndex
 
     t, q = _train(spark, sf), _queries_mod(spark, sf)
     idx = OPQIndex.fit(t, m=8, ksub=16, iters=3, seed=1, max_iter=8,
                        sort_col="id")
     enc = idx.encode(t).select("id", "codes")
-    approx = idx.search(enc, q, k=10, refine_train=t,
-                        overfetch=4).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    approx = idx.search(enc, q, k=10, refine_train=t, overfetch=4)
+    exact = knn(t, q, k=10, method="expr")
+    return _recall_gate(sf, mx.topk_recall(approx, exact), (0.65, 0.4), (0.4, 0.1))
 
 
 def q_jl_knn(spark, sf):
@@ -870,20 +839,12 @@ def q_bq_recall(spark, sf):
     a fixed 1-bit/dim budget genuinely falls as corpus density grows (the
     same published behavior pq_recall documents), so the floor sits under
     the healthy-at-scale tail."""
-    mean_thr, min_thr = _gate(sf, tight=(0.6, 0.3), floor=(0.35, 0.05))
     t, q = _train(spark, sf), _queries_mod(spark, sf)
     idx = BQIndex.fit(t, sort_col="id")
     approx = idx.search(idx.encode(t, keep=["id"]), q, k=10,
-                        refine_train=t, overfetch=4).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+                        refine_train=t, overfetch=4)
+    exact = knn(t, q, k=10, method="expr")
+    return _recall_gate(sf, mx.topk_recall(approx, exact), (0.6, 0.3), (0.35, 0.05))
 
 
 def q_sq8_knn(spark, sf):
@@ -914,21 +875,13 @@ def q_sq8_recall(spark, sf):
     scripts/calibrate_gates.py convention); the tight gate 0.97/0.9 trips
     on any scale/sign/rounding defect while tolerating a rare boundary
     swap.  Off the oracle sfs it relaxes to a defect-only 0.9/0.7 floor."""
-    mean_thr, min_thr = _gate(sf, tight=(0.97, 0.9), floor=(0.9, 0.7))
     from bigvectorbench_spark.operators.quantize import knn_quantized, quantize_table
 
     t, q = _train(spark, sf), _queries_mod(spark, sf)
     tq = quantize_table(t, vec_col="vec", out_col="qvec").select("id", "qvec")
-    approx = knn_quantized(tq, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    approx = knn_quantized(tq, q, k=10, method="expr")
+    exact = knn(t, q, k=10, method="expr")
+    return _recall_gate(sf, mx.topk_recall(approx, exact), (0.97, 0.9), (0.9, 0.7))
 
 
 def q_ivf_recall(spark, sf):
@@ -943,19 +896,11 @@ def q_ivf_recall(spark, sf):
     fails the driver gate — not only a cratering bug.  Off the oracle sf
     the distribution shifts (measured min 0.5 at sf0.001), so the gate
     relaxes to a defect-only floor of 0.4/0.2 (ADVICE r3)."""
-    mean_thr, min_thr = _gate(sf, tight=(0.7, 0.45), floor=(0.4, 0.2))
     t, q = _train(spark, sf), _queries_mod(spark, sf)
     idx = IVFIndex.fit(t, nlist=8, seed=1, max_iter=8, sort_col="id")
-    approx = idx.search(idx.assign(t), q, k=10, nprobe=4).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    approx = idx.search(idx.assign(t), q, k=10, nprobe=4)
+    exact = knn(t, q, k=10, method="expr")
+    return _recall_gate(sf, mx.topk_recall(approx, exact), (0.7, 0.45), (0.4, 0.2))
 
 
 def q_ivf_auto_recall(spark, sf):
@@ -980,22 +925,16 @@ def q_ivf_auto_recall(spark, sf):
     from bigvectorbench_spark.operators.similarity import auto_nprobe
     from bigvectorbench_spark.sources.tables import table_rows
 
-    mean_thr, min_thr = _gate(sf, tight=(0.2, 0.05), floor=(0.15, 0.05))
     t, q = _train(spark, sf), _queries_mod(spark, sf)
     n = table_rows(sf, "embeddings")
     nlist = max(8, round(math.sqrt(n)))
     idx = IVFIndex.fit(t, nlist=nlist, seed=1, max_iter=8, sort_col="id")
-    approx = idx.search(idx.assign(t), q, k=10, nprobe="auto").groupBy(
-        "qid").agg(F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        F.lit(auto_nprobe(nlist)).cast("bigint").alias("auto_nprobe"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    approx = idx.search(idx.assign(t), q, k=10, nprobe="auto")
+    exact = knn(t, q, k=10, method="expr")
+    gate = _recall_gate(sf, mx.topk_recall(approx, exact), (0.2, 0.05), (0.15, 0.05))
+    return gate.select(
+        "n_queries", F.lit(auto_nprobe(nlist)).cast("bigint").alias("auto_nprobe"),
+        "mean_recall_ok", "min_recall_ok")
 
 
 def q_pq_recall(spark, sf):
@@ -1010,20 +949,11 @@ def q_pq_recall(spark, sf):
     falls as corpus density grows (the published PQ behavior), so the
     floor must sit under the healthy-at-scale tail, not the oracle-sf
     one."""
-    mean_thr, min_thr = _gate(sf, tight=(0.5, 0.3), floor=(0.3, 0.05))
     t, q = _train(spark, sf), _queries_mod(spark, sf)
     idx = PQIndex.fit(t, m=8, ksub=16, seed=1, max_iter=8, sort_col="id")
-    approx = idx.search(idx.encode(t), q, k=10, refine_train=t,
-                        overfetch=4).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    approx = idx.search(idx.encode(t), q, k=10, refine_train=t, overfetch=4)
+    exact = knn(t, q, k=10, method="expr")
+    return _recall_gate(sf, mx.topk_recall(approx, exact), (0.5, 0.3), (0.3, 0.05))
 
 
 def q_recall_lowdim_vs_full(spark, sf):
@@ -1032,11 +962,9 @@ def q_recall_lowdim_vs_full(spark, sf):
     t, q = _train(spark, sf), _queries_mod(spark, sf)
     t32 = t.withColumn("vec", F.slice("vec", 1, 32))
     q32 = q.withColumn("vec", F.slice("vec", 1, 32))
-    truth = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    run = knn(t32, q32, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(run, truth)
+    truth = knn(t, q, k=10, method="expr")
+    run = knn(t32, q32, k=10, method="expr")
+    per_q = mx.topk_recall(run, truth)
     return per_q.select("qid", F.round("recall", 6).alias("recall"))
 
 
@@ -2241,7 +2169,6 @@ def q_sparse_delta_parity(spark, sf):
     tight gate 0.85/0.6, off-sf floor 0.5/0.2."""
     from bigvectorbench_spark.operators import sparse as sp
 
-    mean_thr, min_thr = _gate(sf, tight=(0.85, 0.6), floor=(0.5, 0.2))
     docs = _docs_wide(spark, sf)
     base = docs.filter("doc_id % 10 != 7")
     delta = docs.filter("doc_id % 10 = 7")
@@ -2262,16 +2189,10 @@ def q_sparse_delta_parity(spark, sf):
     rebuilt = sp.sparse_postings(docs, post=all_post).persist()
     queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
         F.col("doc_id").alias("qid"))
-    stale = sp.sparse_topk(docs, queries, k=10, wpost=absorbed).groupBy(
-        "qid").agg(F.collect_list("doc_id").alias("neighbors"))
-    fresh = sp.sparse_topk(docs, queries, k=10, wpost=rebuilt).groupBy(
-        "qid").agg(F.collect_list("doc_id").alias("neighbors"))
-    per_q = mx.recall_per_query(stale, fresh)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    stale = sp.sparse_topk(docs, queries, k=10, wpost=absorbed)
+    fresh = sp.sparse_topk(docs, queries, k=10, wpost=rebuilt)
+    return _recall_gate(sf, mx.topk_recall(stale, fresh, id_col="doc_id"),
+                        (0.85, 0.6), (0.5, 0.2))
 
 
 def q_bloom_decontaminate(spark, sf):
@@ -2689,25 +2610,18 @@ def q_sparse_prune_recall(spark, sf):
     0.6/0.3 only on a cratering bug."""
     from bigvectorbench_spark.operators import sparse as sp
 
-    mean_thr, min_thr = _gate(sf, tight=(0.9, 0.8), floor=(0.6, 0.3))
     docs = _docs_wide(spark, sf)
     queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
         F.col("doc_id").alias("qid"))
     wpost = sp.sparse_postings(docs, post=sp.lexical_postings(docs)).persist()
-    exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost).groupBy("qid").agg(
-        F.collect_list("doc_id").alias("neighbors"))
+    exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost)
     pruned = sp.sparse_topk(
         docs, queries, k=10,
         wpost=sp.prune_postings(wpost, m="auto",
                                 n_docs=load_table(spark, sf, "documents").count()),
-        qwpost=wpost
-    ).groupBy("qid").agg(F.collect_list("doc_id").alias("neighbors"))
-    per_q = mx.recall_per_query(pruned, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+        qwpost=wpost)
+    return _recall_gate(sf, mx.topk_recall(pruned, exact, id_col="doc_id"),
+                        (0.9, 0.8), (0.6, 0.3))
 
 
 def q_sparse_filter_knn(spark, sf):
@@ -2773,24 +2687,16 @@ def q_sparse_quantile_recall(spark, sf):
     500k regime in SCALE_SPARSE_r10.json (Zipf + uniform-df)."""
     from bigvectorbench_spark.operators import sparse as sp
 
-    mean_thr, min_thr = _gate(sf, tight=(0.9, 0.8), floor=(0.6, 0.3))
     docs = _docs_wide(spark, sf)
     queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
         F.col("doc_id").alias("qid"))
     wpost = sp.sparse_postings(docs, post=sp.lexical_postings(docs)).persist()
-    exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost).groupBy("qid").agg(
-        F.collect_list("doc_id").alias("neighbors"))
+    exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost)
     pruned = sp.sparse_topk(
         docs, queries, k=10,
-        wpost=sp.prune_postings(wpost, m="spectrum"),
-        qwpost=wpost
-    ).groupBy("qid").agg(F.collect_list("doc_id").alias("neighbors"))
-    per_q = mx.recall_per_query(pruned, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+        wpost=sp.prune_postings(wpost, m="spectrum"), qwpost=wpost)
+    return _recall_gate(sf, mx.topk_recall(pruned, exact, id_col="doc_id"),
+                        (0.9, 0.8), (0.6, 0.3))
 
 
 def _rrf_top10(lex, vec):
@@ -2986,7 +2892,6 @@ def q_hybrid_rrf_parity(spark, sf):
     oracle-sf floor so a candidate-stage defect (not only a cratering
     bug) fails the driver gate; off the oracle sf the gate relaxes to a
     defect-only floor 0.4/0.1."""
-    mean_thr, min_thr = _gate(sf, tight=(0.7, 0.5), floor=(0.4, 0.1))
     tkf = _doc_tokens(spark, sf)
     lex = _lex_leg(spark, sf, tkf)
     base = hy.hashed_corpus(tkf).persist()
@@ -3002,18 +2907,8 @@ def q_hybrid_rrf_parity(spark, sf):
 
     fused_brute = rt.rrf_fuse([lex, brute_vec], k=10, k0=60)
     fused_bq = rt.rrf_fuse([lex, bq_vec], k=10, k0=60)
-    a = fused_brute.groupBy("qid").agg(
-        F.collect_list("doc_id").alias("brute_ids"))
-    b = fused_bq.groupBy("qid").agg(F.collect_list("doc_id").alias("bq_ids"))
-    per = a.join(b, "qid").select(
-        "qid",
-        (F.size(F.array_intersect("brute_ids", "bq_ids"))
-         / F.size("brute_ids")).alias("overlap"))
-    return per.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("overlap") >= mean_thr).alias("mean_overlap_ok"),
-        (F.min("overlap") >= min_thr).alias("min_overlap_ok"),
-    )
+    return _recall_gate(sf, mx.topk_overlap(fused_brute, fused_bq, id_col="doc_id"),
+                        (0.7, 0.5), (0.4, 0.1), col="overlap")
 
 
 def q_mmr_scale(spark, sf):

@@ -36,6 +36,27 @@ def recall_per_query(run: DataFrame, truth: DataFrame, *, run_col: str = "neighb
     return j
 
 
+def _id_lists(rows: DataFrame, id_col: str, alias: str) -> DataFrame:
+    return rows.groupBy("qid").agg(F.collect_list(id_col).alias(alias))
+
+
+def topk_recall(run: DataFrame, truth: DataFrame, *, id_col: str = "id") -> DataFrame:
+    """``recall_per_query`` over two ``(qid, id_col)`` top-k row frames:
+    each side folds into one neighbour list per query first."""
+    return recall_per_query(_id_lists(run, id_col, "neighbors"),
+                            _id_lists(truth, id_col, "neighbors"))
+
+
+def topk_overlap(a: DataFrame, b: DataFrame, *, id_col: str = "id") -> DataFrame:
+    """Per-query ``|a∩b| / |a|`` of two top-k row frames (the parity
+    gates: an approximate composition against its brute twin).  Queries
+    missing from either side drop out (inner join)."""
+    per = _id_lists(a, id_col, "a_ids").join(_id_lists(b, id_col, "b_ids"), "qid")
+    return per.select(
+        "qid",
+        (F.size(F.array_intersect("a_ids", "b_ids")) / F.size("a_ids")).alias("overlap"))
+
+
 def recall_summary(run: DataFrame, truth: DataFrame, **kw) -> DataFrame:
     """mean ± std over queries (plotting/metrics.py:19-26)."""
     return recall_per_query(run, truth, **kw).agg(

@@ -12,9 +12,10 @@ Prints, per sf dir given on argv (default sf0.01):
 """
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -71,54 +72,43 @@ def sketch_errors(spark, sf):
               f"in[p49,p51]={ok}")
 
 
-def ann_recalls(spark, sf):
-    t = load_table(spark, sf, "embeddings").select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), "label")
-    q = load_table(spark, sf, "embeddings").filter("vec_id % 50 = 0").select(
+def train_queries(spark, sf):
+    emb = load_table(spark, sf, "embeddings")
+    t = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), "label")
+    q = emb.filter("vec_id % 50 = 0").select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("vec"), "label")
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    ivf = IVFIndex.fit(t, nlist=8, seed=1, max_iter=8, sort_col="id")
-    approx = ivf.search(ivf.assign(t), q, k=10, nprobe=4).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    row = mx.recall_per_query(approx, exact).agg(
+    return t, q
+
+
+def report(label, run, truth, *, id_col="id"):
+    row = mx.topk_recall(run, truth, id_col=id_col).agg(
         F.avg("recall").alias("mean"), F.min("recall").alias("min")).first()
-    print(f"IVF recall mean={row['mean']:.4f} min={row['min']:.4f}")
-    pq = PQIndex.fit(t, m=8, ksub=16, seed=1, max_iter=8, sort_col="id")
-    approxp = pq.search(pq.encode(t), q, k=10, refine_train=t,
-                        overfetch=4).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    rowp = mx.recall_per_query(approxp, exact).agg(
-        F.avg("recall").alias("mean"), F.min("recall").alias("min")).first()
-    print(f"PQ recall mean={rowp['mean']:.4f} min={rowp['min']:.4f}")
+    print(f"{label} mean={row['mean']:.4f} min={row['min']:.4f}")
+
+
+def ann_recalls(spark, sf):
     from bigvectorbench_spark.operators.bq import BQIndex
-
-    bq = BQIndex.fit(t, sort_col="id")
-    approxb = bq.search(bq.encode(t, keep=["id"]), q, k=10, refine_train=t,
-                        overfetch=4).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    rowb = mx.recall_per_query(approxb, exact).agg(
-        F.avg("recall").alias("mean"), F.min("recall").alias("min")).first()
-    print(f"BQ recall mean={rowb['mean']:.4f} min={rowb['min']:.4f}")
     from bigvectorbench_spark.operators.opq import OPQIndex
+    from bigvectorbench_spark.operators.quantize import knn_quantized, quantize_table
 
+    t, q = train_queries(spark, sf)
+    exact = knn(t, q, k=10, method="expr")
+    ivf = IVFIndex.fit(t, nlist=8, seed=1, max_iter=8, sort_col="id")
+    pq = PQIndex.fit(t, m=8, ksub=16, seed=1, max_iter=8, sort_col="id")
+    bq = BQIndex.fit(t, sort_col="id")
     opq = OPQIndex.fit(t, m=8, ksub=16, iters=3, seed=1, max_iter=8,
                        sort_col="id")
-    approxo = opq.search(opq.encode(t).select("id", "codes"), q, k=10,
-                         refine_train=t, overfetch=4).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    rowo = mx.recall_per_query(approxo, exact).agg(
-        F.avg("recall").alias("mean"), F.min("recall").alias("min")).first()
-    print(f"OPQ recall mean={rowo['mean']:.4f} min={rowo['min']:.4f}")
-    from bigvectorbench_spark.operators.quantize import (
-        knn_quantized, quantize_table)
-
+    refine = {"refine_train": t, "overfetch": 4}
     tq = quantize_table(t, vec_col="vec", out_col="qvec").select("id", "qvec")
-    approxs = knn_quantized(tq, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    rows8 = mx.recall_per_query(approxs, exact).agg(
-        F.avg("recall").alias("mean"), F.min("recall").alias("min")).first()
-    print(f"SQ8 recall mean={rows8['mean']:.4f} min={rows8['min']:.4f}")
+    runs = {
+        "IVF": ivf.search(ivf.assign(t), q, k=10, nprobe=4),
+        "PQ": pq.search(pq.encode(t), q, k=10, **refine),
+        "BQ": bq.search(bq.encode(t, keep=["id"]), q, k=10, **refine),
+        "OPQ": opq.search(opq.encode(t).select("id", "codes"), q, k=10, **refine),
+        "SQ8": knn_quantized(tq, q, k=10, method="expr"),
+    }
+    for name, run in runs.items():
+        report(f"{name} recall", run, exact)
 
 
 def sparse_prune_recall(spark, sf):
@@ -128,36 +118,22 @@ def sparse_prune_recall(spark, sf):
     queries = load_table(spark, sf, "documents").filter(
         "doc_id % 100 = 0").select(F.col("doc_id").alias("qid"))
     wpost = sp.sparse_postings(docs, post=sp.lexical_postings(docs)).persist()
-    exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost).groupBy(
-        "qid").agg(F.collect_list("doc_id").alias("neighbors"))
+    exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost)
     for m in (32, 64, 128):
-        pruned = sp.sparse_topk(
-            docs, queries, k=10, wpost=sp.prune_postings(wpost, m=m),
-            qwpost=wpost).groupBy("qid").agg(
-            F.collect_list("doc_id").alias("neighbors"))
-        row = mx.recall_per_query(pruned, exact).agg(
-            F.avg("recall").alias("mean"), F.min("recall").alias("min")).first()
-        print(f"sparse prune m={m} recall mean={row['mean']:.4f} "
-              f"min={row['min']:.4f}")
+        pruned = sp.sparse_topk(docs, queries, k=10,
+                                wpost=sp.prune_postings(wpost, m=m), qwpost=wpost)
+        report(f"sparse prune m={m} recall", pruned, exact, id_col="doc_id")
     wpost.unpersist()
 
 
 def hnsw_recalls(spark, sf):
     from bigvectorbench_spark.operators.hnsw import build_hnsw_shards, hnsw_search
 
-    t = load_table(spark, sf, "embeddings").select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), "label")
-    q = load_table(spark, sf, "embeddings").filter("vec_id % 50 = 0").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("vec"), "label")
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
+    t, q = train_queries(spark, sf)
+    exact = knn(t, q, k=10, method="expr")
     shards = build_hnsw_shards(t, m=8, ef_construction=64, num_shards=4, seed=3)
     for ef in (16, 24, 32, 48):
-        approx = hnsw_search(shards, q, k=10, ef=ef).groupBy("qid").agg(
-            F.collect_list("id").alias("neighbors"))
-        row = mx.recall_per_query(approx, exact).agg(
-            F.avg("recall").alias("mean"), F.min("recall").alias("min")).first()
-        print(f"HNSW recall ef={ef} mean={row['mean']:.4f} min={row['min']:.4f}")
+        report(f"HNSW recall ef={ef}", hnsw_search(shards, q, k=10, ef=ef), exact)
 
 
 if __name__ == "__main__":

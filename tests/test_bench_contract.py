@@ -14,6 +14,7 @@ import io
 import json
 import sys
 from contextlib import redirect_stderr, redirect_stdout
+from pathlib import Path
 
 import pytest
 
@@ -24,7 +25,7 @@ def bench_env(monkeypatch, spark):
     monkeypatch.setenv("SPARK_GRAFT_BENCH_QUERIES",
                        "token_stats,corpus_rollup")
     monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "2")
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import bench
     return bench
 

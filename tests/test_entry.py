@@ -103,6 +103,28 @@ def test_iud_final_state_partitions_the_sweep(spark, sf_dir):
     assert len(rows) == 7 and all(r["n_rows"] > 0 for r in rows)
 
 
+def test_recall_gate_thresholds_and_columns(spark):
+    """Tight thresholds at the oracle sf, the defect floor elsewhere; the
+    pinned mean is NULL off its calibration and absent unless asked for;
+    ``col`` names the gated column and the emitted booleans."""
+    per_q = spark.createDataFrame([(0, 1.0), (1, 0.6)], "qid bigint, recall double")
+    tight, floor = (0.9, 0.5), (0.7, 0.7)   # mean 0.8, min 0.6
+    row = entry._recall_gate("/data/sf0.01", per_q, tight, floor).collect()[0]
+    assert row.asDict() == {"n_queries": 2, "mean_recall_ok": False,
+                            "min_recall_ok": True}
+    row = entry._recall_gate("/data/sf0.001", per_q, tight, floor,
+                             pinned=False).collect()[0]
+    assert row.asDict() == {"n_queries": 2, "mean_recall_ok": True,
+                            "min_recall_ok": False, "mean_recall_r2": None}
+    row = entry._recall_gate("/data/sf0.1", per_q, tight, floor,
+                             pinned=True).collect()[0]
+    assert row["mean_recall_r2"] == 0.8
+    overlap = per_q.withColumnRenamed("recall", "overlap")
+    gate = entry._recall_gate("/data/sf0.01", overlap, tight, floor, col="overlap")
+    assert gate.columns == ["n_queries", "mean_overlap_ok", "min_overlap_ok"]
+    assert gate.collect()[0]["min_overlap_ok"]
+
+
 def test_hybrid_scale_parity_gate_passes(spark, sf_dir):
     """The brute-vs-BQ fused-overlap gate holds at the defect-only floor
     off the oracle sf (measured mean 0.75 / min 0.6 at sf0.001)."""

@@ -62,6 +62,15 @@ def test_verify_distances_clean_and_dirty(tiny, spark):
     assert gt.verify_distances(corrupted, train, test).count() > 0
 
 
+def _topk_recalls(run, truth, id_col="id"):
+    """The same recalls through ``topk_recall``: both list frames exploded
+    back to (qid, id_col) top-k rows, which the helper regroups itself."""
+    def rows(df):
+        return df.select("qid", F.explode("neighbors").alias(id_col))
+    per_q = M.topk_recall(rows(run), rows(truth), id_col=id_col)
+    return {r["qid"]: r["recall"] for r in per_q.collect()}
+
+
 def test_recall_reference_values(spark):
     """The reference's metrics_test.py:31-65 recall cases: 0, 0.5, 0.5, 1.0."""
     truth = spark.createDataFrame(
@@ -74,6 +83,7 @@ def test_recall_reference_values(spark):
     )
     vals = {r["qid"]: r["recall"] for r in M.recall_per_query(run, truth).collect()}
     assert vals == {0: 0.0, 1: 0.5, 2: 0.5, 3: 1.0}
+    assert _topk_recalls(run, truth) == vals
     s = M.recall_summary(run, truth).collect()[0]
     assert s["mean_recall"] == pytest.approx(0.5)
 
@@ -88,6 +98,18 @@ def test_recall_pad_and_empty_truth(spark):
     vals = {r["qid"]: r["recall"] for r in M.recall_per_query(run, truth).collect()}
     assert vals[0] == 1.0   # pad stripped from both sides
     assert vals[1] == 1.0   # empty truth -> 1.0 (plotting/metrics.py:21)
+    assert _topk_recalls(run, truth, id_col="doc_id") == vals
+
+
+def test_topk_overlap(spark):
+    """|a∩b| / |a| per query; a query missing from either side drops out."""
+    a = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 3), (1, 4), (2, 5)], "qid bigint, doc_id bigint")
+    b = spark.createDataFrame(
+        [(0, 2), (0, 9), (1, 3), (1, 4)], "qid bigint, doc_id bigint")
+    vals = {r["qid"]: r["overlap"]
+            for r in M.topk_overlap(a, b, id_col="doc_id").collect()}
+    assert vals == {0: 0.5, 1: 1.0}
 
 
 def test_qps_and_percentiles(spark):
